@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Pre-snapshot gate (VERDICT r7 "Next round" #3): a round must not ship
-# with a red test suite or erroring bench queries. Runs the full ScalaTest
-# suite, then a single-scale bench smoke at sf0.01 (every declared query,
-# min-of-2), and FAILS (non-zero exit) if either is red. Output is meant
+# with a red test suite or erroring bench queries. Runs the check.py and
+# perfbench arithmetic self-tests, the full ScalaTest suite, then a
+# single-scale bench smoke at sf0.01 (every declared query, min-of-2),
+# and FAILS (non-zero exit) if any is red. Output is meant
 # to be captured into GATE.md by the round's final commit:
 #
 #   scripts/gate.sh 2>&1 | tee GATE.md
@@ -20,6 +21,15 @@ if python3 scripts/check_selftest.py; then
   selftest_ok=1
 else
   selftest_ok=0
+fi
+echo
+
+echo "## perfbench arithmetic unit tests"
+# no bytecode caches left under perfbench/
+if PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench/tests; then
+  perfbench_ok=1
+else
+  perfbench_ok=0
 fi
 echo
 
@@ -70,10 +80,12 @@ print(f\"queries={len(d.get('queries',{}))} total={d.get('value')}s ingest={d.ge
 fi
 echo
 
-if [ "$tests_ok" = 1 ] && [ "$bench_ok" = 1 ] && [ "$selftest_ok" = 1 ]; then
+if [ "$tests_ok" = 1 ] && [ "$bench_ok" = 1 ] && [ "$selftest_ok" = 1 ] &&
+   [ "$perfbench_ok" = 1 ]; then
   echo "GATE: PASS"
   exit 0
 else
-  echo "GATE: FAIL (tests_ok=$tests_ok bench_ok=$bench_ok selftest_ok=$selftest_ok)"
+  echo "GATE: FAIL (tests_ok=$tests_ok bench_ok=$bench_ok selftest_ok=$selftest_ok" \
+    "perfbench_ok=$perfbench_ok)"
   exit 1
 fi

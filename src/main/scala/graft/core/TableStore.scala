@@ -2,9 +2,10 @@ package graft.core
 
 import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType,
+  MapType, ShortType, StructType}
 import graft.cep.{EventProcessor, Process}
 import graft.ops.Profile
 
@@ -15,7 +16,8 @@ import graft.ops.Profile
   *
   * Layout:
   *   <path>/files/<uuid>-part-*.parquet   immutable data files
-  *   <path>/_versions/v{N}.manifest       "name<TAB>idMin<TAB>idMax<TAB>rowCount" per file
+  *   <path>/_versions/v{N}.manifest       "name<TAB>idMin<TAB>idMax<TAB>rowCount" per file,
+  *                                        plus the committed schema ("#schema<TAB>json")
   *
   * A version is committed by renaming a temp manifest into place —
   * one atomic filesystem op, so there is NO window where a reader sees
@@ -133,18 +135,31 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   private def latestContent(f: FileSystem): Option[(Long, String)] =
     listVersions(f).lastOption.map { case (v, p) => (v, readUtf8(f, p)) }
 
-  private def latestManifest(f: FileSystem): Option[(Long, Seq[FileEntry])] =
-    latestContent(f).map { case (v, c) => (v, log.decode(c)) }
+  /** The table schema a version file records (None on legacy tables
+    * written before the schema-enforcement change). */
+  private def schemaOf(content: String): Option[StructType] =
+    log.decodeSchema(content).map(j => DataType.fromJson(j).asInstanceOf[StructType])
 
-  /** The committed table schema of the latest version (recorded in the
-    * version log since the schema-enforcement change; None on legacy
+  /** The committed table schema of the latest version (None on legacy
     * tables, which keep the old read path). */
-  private def committedSchema: Option[org.apache.spark.sql.types.StructType] =
-    latestContent(fs).flatMap(c => log.decodeSchema(c._2))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  private def committedSchema: Option[StructType] =
+    latestContent(fs).flatMap(c => schemaOf(c._2))
 
-  def exists: Boolean = latestManifest(fs).isDefined
+  /** Entries and committed schema of the latest version from ONE
+    * version-log read — (empty, None) before the first commit. Paths
+    * that need both take them from here: two separate reads can
+    * straddle a commit and pair one version's files with another's
+    * schema. */
+  private def latestState: (Seq[FileEntry], Option[StructType]) =
+    latestContent(fs).fold((Seq.empty[FileEntry], Option.empty[StructType])) {
+      case (_, c) => (log.decode(c), schemaOf(c))
+    }
+
+  def exists: Boolean = listVersions(fs).nonEmpty
+
+  /** Sum of per-file row counts; None when a legacy entry lacks one. */
+  private def metaRows(entries: Seq[FileEntry]): Option[Long] =
+    if (entries.forall(_.rows.isDefined)) Some(entries.flatMap(_.rows).sum) else None
 
   /** Committed row count resolved from manifest METADATA — O(1), no
     * Spark job (manifests carry per-file rowCounts). None when the
@@ -154,10 +169,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * saturation checks) skip whole Spark jobs: on a long sequential
     * chain of small actions, every removed action is wall time. */
   def committedRowCount: Option[Long] =
-    latestManifest(fs).flatMap { case (_, entries) =>
-      val counts = entries.map(_.rows)
-      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
-    }
+    latestContent(fs).flatMap(c => metaRows(log.decode(c._2)))
 
   /** Row count AND snapshot DataFrame from ONE manifest resolution —
     * `None` when no version is committed; the inner count is `None` on
@@ -178,57 +190,59 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   def committedSnapshotVersioned: Option[(Long, Option[Long], DataFrame)] =
     latestContent(fs).map { case (v, c) =>
       val entries = log.decode(c)
-      val counts = entries.map(_.rows)
-      val n = if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
-      val schema = log.decodeSchema(c).map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      (v, n, readFiles(entries, schema))
+      (v, metaRows(entries), readFiles(entries, schemaOf(c)))
     }
 
-  private val schemaDir = s"$path/_schema"
-
-  /** Commit an empty version with a zero-row schema anchor, so reads
-    * work before the first persist (the reference's registerTable
-    * creates the table eagerly — persistent/Session.java:181-277).
-    * No-op if a version already exists. */
-  def initialize(schema: org.apache.spark.sql.types.StructType): Unit =
+  /** Commit an empty version recording `schema`, so reads work before
+    * the first persist (the reference's registerTable creates the
+    * table eagerly — persistent/Session.java:181-277). Metadata only:
+    * no data file and no Spark job. No-op if a version already exists. */
+  def initialize(schema: StructType): Unit =
     TableStore.commitLock(path).synchronized {
       lastSchemaJson = Some(schema.json)
-      // backfill the anchor for pre-anchor tables too, not only fresh
-      // ones — an already-populated table still needs it once every
-      // row is deleted and vacuum empties files/
-      if (!fs.exists(new Path(schemaDir)))
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .write.mode("overwrite").parquet(schemaDir)
       if (!exists) commit(prev => prev)
     }
+
+  /** `dt` with every field and container element nullable — the shape
+    * a parquet scan reports, and the erasure schema enforcement
+    * compares under (nullability is not a type change). */
+  private def asNullable(dt: DataType): DataType = dt match {
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case other => other
+  }
 
   /** Read `entries` under `schema` when one is committed: parquet
     * scans given an explicit schema surface columns a file predates
     * as nulls — additive evolution needs NO rewrite of old files. */
-  private def readFiles(entries: Seq[FileEntry],
-                        schema: Option[org.apache.spark.sql.types.StructType] = None)
+  private def readFiles(entries: Seq[FileEntry], schema: Option[StructType] = None)
       : DataFrame = {
-    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    if (entries.nonEmpty) reader.parquet(entries.map(e => s"$filesDir/${e.name}"): _*)
-    else if (fs.exists(new Path(schemaDir)))
-      reader.parquet(schemaDir) // zero rows, schema preserved
-    // legacy committed-empty fallback — the requested schema must
-    // still apply (a post-evolution diff reads an empty FROM side
-    // under the widened TO schema; inferring from files/ here made
-    // that exceptAll a column-count mismatch)
-    else reader.parquet(filesDir).limit(0)
+    if (entries.nonEmpty)
+      schema.fold(spark.read)(s => spark.read.schema(s))
+        .parquet(entries.map(e => s"$filesDir/${e.name}"): _*)
+    else schema match {
+      // empty snapshot: zero rows under the requested schema, shaped
+      // like a scan, as a local frame — no Spark job
+      case Some(s) =>
+        spark.createDataFrame(new java.util.ArrayList[Row](),
+          asNullable(s).asInstanceOf[StructType])
+      // legacy schema-less manifest: the zero-row anchor older stores
+      // wrote at creation, else infer from files/
+      case None =>
+        val anchor = s"$path/_schema"
+        if (fs.exists(new Path(anchor))) spark.read.parquet(anchor)
+        else spark.read.parquet(filesDir).limit(0)
+    }
   }
 
   /** Current snapshot. The file list is resolved now; concurrent
     * commits do not disturb this DataFrame. */
   def read: DataFrame = {
     latestContent(fs) match {
-      case Some((_, c)) =>
-        readFiles(log.decode(c), log.decodeSchema(c).map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]))
+      case Some((_, c)) => readFiles(log.decode(c), schemaOf(c))
       case None =>
         throw new IllegalStateException(s"table store at $path has no committed version")
     }
@@ -339,16 +353,19 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     if (!f.exists(sd)) return
     val present = f.listStatus(sd).map(_.getPath.getName).toSet
     entries.filterNot(e => present.contains(e.name)).foreach { e =>
-      val src = new Path(s"$filesDir/${e.name}")
-      val dst = new Path(s"$streamedDir/${e.name}")
-      if (f.getScheme == "file")
-        try java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      else org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false, f.getConf)
+      linkOrCopy(f, new Path(s"$filesDir/${e.name}"), new Path(s"$streamedDir/${e.name}"))
     }
   }
+
+  /** Hardlink `src` at `dst` on a local filesystem (no bytes move; an
+    * existing link is left alone), byte copy elsewhere. */
+  private def linkOrCopy(f: FileSystem, src: Path, dst: Path): Unit =
+    if (f.getScheme == "file")
+      try java.nio.file.Files.createLink(
+        java.nio.file.Paths.get(dst.toUri.getPath),
+        java.nio.file.Paths.get(src.toUri.getPath))
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    else org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false, f.getConf)
 
   /** Committed version numbers still present, oldest first — the
     * time-travel index (`vacuum` trims versions past its grace window). */
@@ -387,9 +404,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   def readVersion(version: Long): DataFrame = {
     val content = contentOfVersion(version)
     // time travel surfaces the schema AS COMMITTED THEN, not today's
-    readFiles(log.decode(content), log.decodeSchema(content).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]))
+    readFiles(log.decode(content), schemaOf(content))
   }
 
   private def contentOfVersion(version: Long): String = {
@@ -417,9 +432,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     val to = log.decode(toContent)
     // both sides read under the TO version's (wider, additive) schema
     // so exceptAll compares congruent rows across an evolution
-    val schema = log.decodeSchema(toContent).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val schema = schemaOf(toContent)
     val common = from.map(_.name).toSet.intersect(to.map(_.name).toSet)
     val onlyFrom = readFiles(from.filterNot(e => common(e.name)), schema)
     val onlyTo = readFiles(to.filterNot(e => common(e.name)), schema)
@@ -691,7 +704,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   }
 
   private def currentEntries: Seq[FileEntry] =
-    latestManifest(fs).map(_._2).getOrElse(Seq.empty)
+    latestContent(fs).map(c => log.decode(c._2)).getOrElse(Seq.empty)
 
   /** Rewrite commit: `replaced` (from the writer's snapshot) is swapped
     * for `newFiles`; files committed by OTHERS since the snapshot are
@@ -701,14 +714,20 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   private def commitRewrite(snapshot: Seq[FileEntry], replaced: Seq[FileEntry],
                             newFiles: Seq[FileEntry],
                             txnUpdate: Map[String, Long] => Map[String, Long] = identity)
-      : Unit = {
+      : Unit =
+    commit(rewritten(snapshot, replaced, newFiles), txnUpdate)
+
+  /** [[commitRewrite]]'s update: `prev` with `replaced` swapped for
+    * `newFiles`, keeping files committed by others since `snapshot`. */
+  private def rewritten(snapshot: Seq[FileEntry], replaced: Seq[FileEntry],
+                        newFiles: Seq[FileEntry]): Seq[FileEntry] => Seq[FileEntry] = {
     val snapshotNames = snapshot.map(_.name).toSet
     val replacedNames = replaced.map(_.name).toSet
-    commit({ prev =>
+    prev => {
       val concurrentlyAdded = prev.filterNot(e => snapshotNames.contains(e.name))
       prev.filter(e => snapshotNames.contains(e.name) && !replacedNames.contains(e.name)) ++
         newFiles ++ concurrentlyAdded
-    }, txnUpdate)
+    }
   }
 
   /** Largest id in the table, METADATA-ONLY when every live file
@@ -729,10 +748,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
 
   /** Total rows, metadata-only when possible (None forces the caller's
     * fallback — only legacy manifests lack per-file counts). */
-  private[graft] def rowCountFromManifest: Option[Long] = {
-    val entries = currentEntries
-    if (entries.forall(_.rows.isDefined)) Some(entries.flatMap(_.rows).sum) else None
-  }
+  private[graft] def rowCountFromManifest: Option[Long] = metaRows(currentEntries)
 
   /** Cutoff id such that `deleteBelowId(cutoff)` retains the newest
     * `n` rows by id order; None when the table already holds <= n rows
@@ -850,14 +866,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     require(!target.exists, s"clone: target $targetPath already has versions")
     f.mkdirs(new Path(target.filesDir))
     entries.foreach { e =>
-      val src = new Path(s"$filesDir/${e.name}")
-      val dst = new Path(s"${target.filesDir}/${e.name}")
-      if (f.getScheme == "file")
-        try java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      else org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false, f.getConf)
+      linkOrCopy(f, new Path(s"$filesDir/${e.name}"), new Path(s"${target.filesDir}/${e.name}"))
     }
     // carry the committed schema and column stats into the clone's
     // first commit — a clone that forgot stats would read its whole
@@ -877,27 +886,19 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * null on write), but may never CHANGE an existing column's type —
     * that is the silent-corruption path a 100 TB table cannot afford,
     * so it throws. Returns the incoming rows aligned to the merged
-    * schema. Legacy tables with no committed schema pass through. */
-  private def enforceSchema(rows: DataFrame): DataFrame =
-    committedSchema match {
+    * schema. `committed` is the table's schema (`committedSchema`, or
+    * taken from the same version read as the caller's entries); legacy
+    * tables with no committed schema pass through. */
+  private def enforceSchema(rows: DataFrame, committed: Option[StructType]): DataFrame =
+    committed match {
       case None => rows
       case Some(cur) =>
         // nullability (incl. containsNull/valueContainsNull inside
         // containers) is not a TYPE change — compare erased structure
-        def erased(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
-          import org.apache.spark.sql.types._
-          dt match {
-            case a: ArrayType => ArrayType(erased(a.elementType), containsNull = true)
-            case m: MapType => MapType(erased(m.keyType), erased(m.valueType), valueContainsNull = true)
-            case s: StructType => StructType(s.fields.map(f =>
-              f.copy(dataType = erased(f.dataType), nullable = true)))
-            case other => other
-          }
-        }
         val curByName = cur.fields.map(f => f.name -> f).toMap
         rows.schema.fields.foreach { f =>
           curByName.get(f.name).foreach { c =>
-            if (erased(c.dataType) != erased(f.dataType))
+            if (asNullable(c.dataType) != asNullable(f.dataType))
               throw new IllegalArgumentException(
                 s"schema enforcement at $path: column '${f.name}' arrives as " +
                   s"${f.dataType.simpleString} but is committed as " +
@@ -907,7 +908,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         val incomingByName = rows.schema.fields.map(f => f.name -> f).toMap
         val newFields = rows.schema.fields
           .filterNot(f => curByName.contains(f.name)).map(_.copy(nullable = true))
-        val merged = org.apache.spark.sql.types.StructType(cur.fields ++ newFields)
+        val merged = StructType(cur.fields ++ newFields)
         rows.select(merged.fields.map { f =>
           if (incomingByName.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)
@@ -917,7 +918,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Fast insert, no existence check (reference @NoCheck path): new
     * files + manifest commit, nothing rewritten. */
   def append(rows: DataFrame): Unit = Metrics.timer("persistInsertChunk").time {
-    val added = writeFiles(enforceSchema(rows))
+    val added = writeFiles(enforceSchema(rows, committedSchema))
     commit(prev => prev ++ added)
   }
 
@@ -997,12 +998,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Last applied idempotence version for `appId` (a streaming sink's
     * micro-batch id), from the LATEST version file only — the state is
     * cumulative per version, never a chain replay. */
-  def lastTxn(appId: String): Option[Long] = {
-    val f = fs
-    listVersions(f).lastOption.flatMap { case (_, p) =>
-      log.decodeTxn(readUtf8(f, p)).get(appId)
-    }
-  }
+  def lastTxn(appId: String): Option[Long] =
+    latestContent(fs).flatMap(c => log.decodeTxn(c._2).get(appId))
 
   /** EXACTLY-ONCE append: commit `rows` and the (appId, version)
     * idempotence marker in ONE atomic manifest rename. A replay of an
@@ -1014,7 +1011,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * batch was applied, false when deduplicated. */
   def appendOnce(appId: String, version: Long, rows: DataFrame): Boolean = {
     if (lastTxn(appId).exists(_ >= version)) return false
-    val added = writeFiles(enforceSchema(rows))
+    val added = writeFiles(enforceSchema(rows, committedSchema))
     var applied = false
     commit(
       prev => {
@@ -1027,15 +1024,19 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       prevTxn =>
         if (prevTxn.get(appId).exists(_ >= version)) prevTxn
         else prevTxn + (appId -> version))
-    if (!applied) { // lost the race — drop the orphaned files
-      val f = fs
-      added.foreach{ e =>
-        pendingColStats.remove(e.name) // never let an orphan's stats linger
-        try f.delete(new Path(s"$filesDir/${e.name}"), false)
-        catch { case _: java.io.IOException => }
-      }
-    }
+    if (!applied) dropOrphans(added) // lost the race
     applied
+  }
+
+  /** Delete the files a once-writer wrote but did not commit (it lost
+    * the idempotence race), with their pending stats. */
+  private def dropOrphans(files: Seq[FileEntry]): Unit = {
+    val f = fs
+    files.foreach { e =>
+      pendingColStats.remove(e.name) // never let an orphan's stats linger
+      try f.delete(new Path(s"$filesDir/${e.name}"), false)
+      catch { case _: java.io.IOException => }
+    }
   }
 
   /** Split `entries` into (files whose id range intersects the key
@@ -1043,6 +1044,9 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * of truly-affected files. */
   private def pruneByKeys(entries: Seq[FileEntry],
                           keys: DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
+    // nothing to prune: skip the key-range job (a first load into an
+    // initialized store writes its files and nothing else)
+    if (entries.isEmpty) return (Seq.empty, Seq.empty)
     if (!isIntegralId(keys)) return (entries, Seq.empty)
     val r = keys.agg(min(col(idCol)), max(col(idCol))).head
     if (r.isNullAt(0)) return (Seq.empty, entries) // no keys at all
@@ -1057,12 +1061,15 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * `singleFile` shapes the rewrite output to one file (the
     * @NoDistribute dim-table layout) — coalescing only the incoming
     * batch would leave the MERGE rewrite multi-file. */
-  def upsert(rows: DataFrame, singleFile: Boolean = false): Unit = {
-    // fresh-store delegation ticks the timer inside append — not here,
-    // so one logical chunk insert never counts twice
-    if (!exists) { append(if (singleFile) rows.coalesce(1) else rows); return }
-    Metrics.timer("persistInsertChunk").time { upsertExisting(rows, singleFile) }
-  }
+  def upsert(rows: DataFrame, singleFile: Boolean = false): Unit =
+    latestContent(fs) match {
+      // fresh-store delegation ticks the timer inside append — not
+      // here, so one logical chunk insert never counts twice
+      case None => append(if (singleFile) rows.coalesce(1) else rows)
+      case Some((_, c)) => Metrics.timer("persistInsertChunk").time {
+        upsertExisting(rows, singleFile, log.decode(c), schemaOf(c))
+      }
+    }
 
   /** EXACTLY-ONCE upsert: like [[appendOnce]] but MERGING on the id —
     * the sink primitive of a continuously-maintained materialized
@@ -1071,10 +1078,14 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * manifest rename; a replayed batch no-ops. Returns true when
     * applied. */
   def upsertOnce(appId: String, version: Long, rows: DataFrame): Boolean = {
-    if (lastTxn(appId).exists(_ >= version)) return false
-    if (!exists) return appendOnce(appId, version, rows)
-    val rowsE = enforceSchema(rows)
-    val snapshot = currentEntries
+    // txn state, schema and entries all from ONE version read
+    val content = latestContent(fs) match {
+      case None => return appendOnce(appId, version, rows)
+      case Some((_, c)) => c
+    }
+    if (log.decodeTxn(content).get(appId).exists(_ >= version)) return false
+    val rowsE = enforceSchema(rows, schemaOf(content))
+    val snapshot = log.decode(content)
     val (affected, _) = pruneByKeys(snapshot, rowsE.select(col(idCol)))
     val merged =
       if (affected.isEmpty) rowsE
@@ -1082,29 +1093,16 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         .join(rowsE.select(col(idCol)), Seq(idCol), "left_anti")
         .unionByName(rowsE)
     val newFiles = writeFiles(merged)
-    val snapshotNames = snapshot.map(_.name).toSet
-    val replacedNames = affected.map(_.name).toSet
+    val update = rewritten(snapshot, affected, newFiles)
     var applied = false
     commit({ prev =>
       // re-check INSIDE the attempt (update fns re-evaluate on retry)
       applied = !lastTxn(appId).exists(_ >= version)
-      if (!applied) prev
-      else {
-        val concurrentlyAdded = prev.filterNot(e => snapshotNames.contains(e.name))
-        prev.filter(e => snapshotNames.contains(e.name) &&
-          !replacedNames.contains(e.name)) ++ newFiles ++ concurrentlyAdded
-      }
+      if (applied) update(prev) else prev
     }, prevTxn =>
       if (prevTxn.get(appId).exists(_ >= version)) prevTxn
       else prevTxn + (appId -> version))
-    if (!applied) {
-      val f = fs
-      newFiles.foreach{ e =>
-        pendingColStats.remove(e.name) // never let an orphan's stats linger
-        try f.delete(new Path(s"$filesDir/${e.name}"), false)
-        catch { case _: java.io.IOException => }
-      }
-    }
+    if (!applied) dropOrphans(newFiles)
     applied
   }
 
@@ -1116,10 +1114,12 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * is cheaper than merge bookkeeping); [[upsertOnce]] is the
     * per-key-merge sibling for views too large to rewrite. */
   def replaceOnce(appId: String, version: Long, rows: DataFrame): Boolean = {
-    if (lastTxn(appId).exists(_ >= version)) return false
-    if (!exists) return appendOnce(appId, version, rows)
-    val rowsE = enforceSchema(rows)
-    val newFiles = writeFiles(rowsE)
+    val content = latestContent(fs) match {
+      case None => return appendOnce(appId, version, rows)
+      case Some((_, c)) => c
+    }
+    if (log.decodeTxn(content).get(appId).exists(_ >= version)) return false
+    val newFiles = writeFiles(enforceSchema(rows, schemaOf(content)))
     var applied = false
     commit({ prev =>
       applied = !lastTxn(appId).exists(_ >= version)
@@ -1127,20 +1127,13 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     }, prevTxn =>
       if (prevTxn.get(appId).exists(_ >= version)) prevTxn
       else prevTxn + (appId -> version))
-    if (!applied) {
-      val f = fs
-      newFiles.foreach{ e =>
-        pendingColStats.remove(e.name) // never let an orphan's stats linger
-        try f.delete(new Path(s"$filesDir/${e.name}"), false)
-        catch { case _: java.io.IOException => }
-      }
-    }
+    if (!applied) dropOrphans(newFiles)
     applied
   }
 
-  private def upsertExisting(rows0: DataFrame, singleFile: Boolean): Unit = {
-    val rows = enforceSchema(rows0)
-    val snapshot = currentEntries
+  private def upsertExisting(rows0: DataFrame, singleFile: Boolean,
+                             snapshot: Seq[FileEntry], schema: Option[StructType]): Unit = {
+    val rows = enforceSchema(rows0, schema)
     val (affected, _) = pruneByKeys(snapshot, rows.select(col(idCol)))
     val merged =
       if (affected.isEmpty) rows
@@ -1177,17 +1170,19 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
             insertNotMatched: Boolean = true): Unit = {
     require(!matchedUpdate.contains(idCol),
       s"merge: the id column '$idCol' cannot be assigned")
-    if (!exists) {
-      if (insertNotMatched) append(source)
-      return
+    // schema and entries from ONE version read
+    val (snapshot, schema) = latestContent(fs) match {
+      case None =>
+        if (insertNotMatched) append(source)
+        return
+      case Some((_, c)) => (log.decode(c), schemaOf(c))
     }
-    val src = enforceSchema(source).localCheckpoint(true)
+    val src = enforceSchema(source, schema).localCheckpoint(true)
     try {
       val dups = src.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).limit(1).count()
       require(dups == 0L,
         "merge: duplicate source keys — a target row would match twice")
-      val snapshot = currentEntries
       val (affected, _) = pruneByKeys(snapshot, src.select(col(idCol)))
       // the ENFORCED source's schema = committed ++ new nullable
       // columns, so merge participates in additive evolution exactly
@@ -1224,15 +1219,18 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
 
   /** `session.find(cls, id)` (persistent/Session.java:326-342): the
     * manifest's file stats prune to the file(s) whose range covers the
-    * key, then parquet row-group min/max prune within. */
+    * key, then parquet row-group min/max prune within. Reads under the
+    * committed schema, so a row written before an additive evolution
+    * carries the newer columns as null, as in `read`. */
   def find(id: Any): DataFrame = {
+    val (entries, schema) = latestState
     val pruned = id match {
       case n: Number =>
         val k = n.longValue()
-        currentEntries.filter(_.overlaps(k, k))
-      case _ => currentEntries
+        entries.filter(_.overlaps(k, k))
+      case _ => entries
     }
-    readFiles(pruned).filter(col(idCol) === lit(id))
+    readFiles(pruned, schema).filter(col(idCol) === lit(id))
   }
 
   /** Range scan with manifest-level data skipping: only files whose
@@ -1247,8 +1245,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * `compact(clusterBy=id)` exists. Files without stats (non-integral
     * id, null ids) are conservatively always read. */
   def readRange(kmin: Long, kmax: Long): DataFrame = {
-    val entries = currentEntries.filter(_.overlaps(kmin, kmax))
-    readFiles(entries)
+    val (entries, schema) = latestState
+    readFiles(entries.filter(_.overlaps(kmin, kmax)), schema)
       .filter(col(idCol) >= lit(kmin) && col(idCol) <= lit(kmax))
   }
 
@@ -1275,9 +1273,12 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * filtering; this only shrinks the file set, conservatively. */
   def readPruned(bounds: Map[String, (Double, Double)],
                  idRange: Option[(Long, Long)] = None): DataFrame = {
-    val stats = latestContent(fs).map(c => log.decodeColStats(c._2))
+    // stats, entries and schema from ONE version read: separate reads
+    // could pair one version's stats with another version's files
+    val content = latestContent(fs).map(_._2)
+    val stats = content.map(log.decodeColStats)
       .getOrElse(Map.empty[String, Map[String, (Double, Double)]])
-    val entries = currentEntries.filter { e =>
+    val entries = content.map(log.decode).getOrElse(Seq.empty).filter { e =>
       idRange.forall { case (klo, khi) => e.overlaps(klo, khi) } &&
       bounds.forall { case (c, (lo, hi)) =>
         stats.get(e.name).flatMap(_.get(c)) match {
@@ -1286,7 +1287,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         }
       }
     }
-    readFiles(entries, committedSchema)
+    readFiles(entries, content.flatMap(schemaOf))
   }
 
   /** DELETE WHERE: removes rows where the condition is TRUE only —
@@ -1340,8 +1341,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * post-delete state (reference: cluster-locked table rewrite —
     * sql/SQLSelect.java:278-285). */
   def process(condition: Column, processor: EventProcessor): Process.Result = {
-    val snapshot = currentEntries
-    val res = Process.run(readFiles(snapshot), condition, processor, Some(idCol))
+    val (snapshot, schema) = latestState
+    val res = Process.run(readFiles(snapshot, schema), condition, processor, Some(idCol))
     if (processor.delete()) commitRewrite(snapshot, snapshot, writeFiles(res.retained))
     res
   }

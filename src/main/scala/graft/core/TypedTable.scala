@@ -65,19 +65,15 @@ final class TypedTable[T: Encoder](val spark: SparkSession, val store: TableStor
     val withIds =
       if (!meta.generatedId) df
       else {
-        val needGen = df.filter(col(idc) === 0)
-        val keepIds = df.filter(col(idc) =!= 0)
-        if (needGen.isEmpty) df
-        else {
-          // id base from manifest stats — metadata-only, no table scan
-          // per insert batch (TableStore.maxId falls back to a scan
-          // only for legacy stat-less manifests)
-          val base: Long =
-            if (!store.exists) 0L
-            else store.maxId.map(m => math.max(0L, m)).getOrElse(0L)
-          keepIds.unionByName(
-            needGen.withColumn(idc, lit(base + 1) + monotonically_increasing_id()))
-        }
+        // id base from manifest stats — metadata-only, no table scan
+        // per insert batch (TableStore.maxId falls back to a scan
+        // only for legacy stat-less manifests). Read even when the
+        // batch holds no zero id: finding out would cost a job. The
+        // cast keeps the declared id type for schema enforcement
+        val base = store.maxId.map(m => math.max(0L, m)).getOrElse(0L)
+        df.withColumn(idc,
+          when(col(idc) === 0, lit(base + 1) + monotonically_increasing_id())
+            .otherwise(col(idc)).cast(df.schema(idc).dataType))
       }
     // @NoCheck id field: skip the upsert existence anti-join and append
     // directly — the reference's fast CEP-insert path (persistent/

@@ -63,6 +63,33 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(all.map(_.id).distinct.length == 4)
   }
 
+  test("@DistributedId: zero ids over several partitions mix with explicit ids") {
+    val gs = new GraftSession(spark)
+    val tt = gs.registerEntity[EventRow]("evt_multi", tmp())
+    tt.persist((1L to 100L).map(i => EventRow(i * 10, s"old$i"))) // prior max 1000
+    // 4 partitions of 6 rows, each holding zero ids next to explicit
+    // ones: an update of 20 and a new id (35) below the prior max
+    val rows = (0 until 24).map { i =>
+      if (i == 5) EventRow(20L, "updated")
+      else if (i == 11) EventRow(35L, "explicit")
+      else EventRow(0L, s"gen$i")
+    }
+    val batch = spark.createDataset(spark.sparkContext.parallelize(rows, 4))
+    val zeroParts = batch.rdd.mapPartitionsWithIndex((p, it) =>
+      if (it.exists(_.id == 0L)) Iterator(p) else Iterator.empty).collect()
+    assert(zeroParts.length >= 3, s"zero ids in partitions ${zeroParts.toSeq}")
+    tt.persistDs(batch)
+    val all = tt.ds.collect()
+    assert(all.length == 100 + 23, all.length)
+    assert(all.map(_.id).distinct.length == all.length, "ids must stay unique")
+    assert(!all.exists(_.id == 0L), "no id may stay zero")
+    assert(all.filter(_.id == 20L).toSeq == Seq(EventRow(20L, "updated")))
+    assert(all.filter(_.id == 35L).toSeq == Seq(EventRow(35L, "explicit")))
+    val generated = all.filter(_.v.startsWith("gen"))
+    assert(generated.length == 22)
+    assert(generated.forall(_.id > 1000L), generated.map(_.id).sorted.toSeq)
+  }
+
   test("@NoCheck persist appends without the existence anti-join") {
     assert(EntityMeta.of[FastEvent].noCheck)
     assert(!EntityMeta.of[EventRow].noCheck)
